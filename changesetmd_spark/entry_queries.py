@@ -374,7 +374,7 @@ def q_tile_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Optional LSH-candidate telemetry threaded into the banded-LSH gates.
 # The driver contract pins gate signatures to (spark, sf_dir), so the
 # bench sets this module hook (a telemetry.CandidateTelemetry) before
-# invoking a gate and reads the observed candidate-pair counts after
+# invoking a gate and reads the observed band-match counts after
 # the gate's action completes — zero extra jobs (DataFrame.observe).
 ACTIVE_TELEMETRY = None
 

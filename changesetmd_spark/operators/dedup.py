@@ -15,7 +15,7 @@ Pair convention: undirected, emitted once with doc_a < doc_b.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import (
@@ -212,11 +212,79 @@ def NGRAM_JACCARD_SQL(
 
 
 # ---------------------------------------------------------------------------
+# banded-LSH candidates — the one band self-join every LSH family uses
+# ---------------------------------------------------------------------------
+
+def band_candidates(
+    keyed: DataFrame,
+    a_name: str,
+    b_name: str,
+    refine: tuple[str, Column, Column] | None = None,
+    telemetry=None,
+    family: str = "band",
+) -> DataFrame:
+    """Distinct candidate pairs of a banded-LSH index: the (band, key)
+    self-join with a.id < b.id, the classic LSH bucket join. ``keyed``
+    is (id, band, key, *payload), one row per id and band; payload
+    column ``c`` reaches the refine as ``c_a`` and ``c_b``. ``refine``
+    is an optional (name, score, keep): a per-pair score Column output
+    as ``name`` and a predicate over it. It runs on every band match
+    before the dedup, so the dedup shuffle carries only surviving pairs
+    (a deterministic per-row filter: same rows as dedup-then-refine).
+    Returns distinct (a_name, b_name[, name]).
+
+    ``telemetry`` (a CandidateTelemetry) observes the raw band-join
+    output as ``family``: Σ_buckets C(size, 2) rows, the n²/2^bits
+    collision gauge. The observed plan is the unobserved plan plus that
+    CollectMetrics node."""
+    payload = [c for c in keyed.columns if c not in ("id", "band", "key")]
+    a, b = keyed.alias("a"), keyed.alias("b")
+    matches = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.key") == F.col("b.key"))
+        & (F.col("a.id") < F.col("b.id")),
+    ).select(
+        F.col("a.id").alias(a_name),
+        F.col("b.id").alias(b_name),
+        *[F.col(f"a.{c}").alias(f"{c}_a") for c in payload],
+        *[F.col(f"b.{c}").alias(f"{c}_b") for c in payload],
+    )
+    if telemetry is not None:
+        matches = telemetry.observe(matches, family)
+    if refine is None:
+        return matches.select(a_name, b_name).distinct()
+    name, score, keep = refine
+    # the score leaves through a one-element explode because Catalyst
+    # cannot push a filter on a generator's output into the join: a
+    # plain projection would let the refine fold into the join
+    # condition when unobserved but not past a CollectMetrics node,
+    # giving two plans
+    return (
+        matches.select(a_name, b_name, F.explode(F.array(score)).alias(name))
+        .filter(keep)
+        .distinct()
+    )
+
+
+def band_keys(sigs: DataFrame, n_bands: int, band_bits: int) -> DataFrame:
+    """(id, band, key, sig): each int64 signature exploded into its
+    ``n_bands`` LSH band buckets, the ``band_candidates`` input of the
+    64-bit families. Works for negative sigs too (bit 63 in two's
+    complement): shiftrightunsigned + mask yields the same band bits as
+    DuckDB's arithmetic ``>>`` + mask."""
+    mask = F.lit((1 << band_bits) - 1)
+    keys = [F.shiftrightunsigned(F.col("sig"), i * band_bits).bitwiseAND(mask) for i in range(n_bands)]
+    return sigs.select("id", F.posexplode(F.array(*keys)).alias("band", "key"), "sig")
+
+
+# ---------------------------------------------------------------------------
 # MinHash + LSH banding
 # ---------------------------------------------------------------------------
 
 def minhash_bands(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, band, band_sig) in ONE aggregation pass (r6 rework).
+    """(id, band, key) in ONE aggregation pass (r6 rework); ``key`` is
+    the band signature, the bucket ``band_candidates`` joins on.
 
     Permutation j of a shingle hash h: (a_j·h + b_j) mod P with
     a_j·h ≤ 33·2^32 ≈ 1.4e11 — ANSI-safe. The r5 shape exploded every
@@ -239,27 +307,19 @@ def minhash_bands(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         for p in range(N_PERM)
     ]
     sig = sh.groupBy("id").agg(*mins)
-    bands_arr = F.array(
+    band_sigs = F.array(
         *[
-            F.struct(
-                F.lit(b).cast("long").alias("band"),
-                F.pmod(
-                    sum(
-                        F.pmod(
-                            F.col(f"_m{b * ROWS_PER_BAND + w}") * F.lit(31**w),
-                            F.lit(MH_PRIME),
-                        )
-                        for w in range(ROWS_PER_BAND)
-                    ),
-                    F.lit(MH_PRIME),
-                ).alias("band_sig"),
+            F.pmod(
+                sum(
+                    F.pmod(F.col(f"_m{b * ROWS_PER_BAND + w}") * F.lit(31**w), F.lit(MH_PRIME))
+                    for w in range(ROWS_PER_BAND)
+                ),
+                F.lit(MH_PRIME),
             )
             for b in range(N_BANDS)
         ]
     )
-    return sig.select("id", F.explode(bands_arr).alias("_bd")).select(
-        "id", F.col("_bd.band").alias("band"), F.col("_bd.band_sig").alias("band_sig")
-    )
+    return sig.select("id", F.posexplode(band_sigs).alias("band", "key"))
 
 
 def minhash_lsh_pairs(
@@ -273,8 +333,8 @@ def minhash_lsh_pairs(
     LSH band signature; refine = exact shingle Jaccard ≥ τ on the
     candidate set only. Returns (doc_a, doc_b, jaccard_q).
 
-    At scale the candidate join is a hash equi-join on (band,
-    band_sig) — the classic LSH bucket join; the refine re-joins the
+    The candidates are ``band_candidates`` over the (band, signature)
+    buckets, without a row refine; the Jaccard refine re-joins the
     shingle index only for candidate pairs. The index is NOT
     checkpointed here (measured slower: each consumer pipelines the
     cheap explode into its own codegen stage, and eager materialization
@@ -284,21 +344,10 @@ def minhash_lsh_pairs(
     sh = _exploded_shingle_hashes(docs, id_col, text_col)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
 
-    bands = minhash_bands(docs, id_col, text_col)
-    ba = bands.alias("ba")
-    bb = bands.alias("bb")
-    cands = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.band_sig") == F.col("bb.band_sig"))
-            & (F.col("ba.id") < F.col("bb.id")),
-        )
-        .select(F.col("ba.id").alias("doc_a"), F.col("bb.id").alias("doc_b"))
-        .distinct()
+    cands = band_candidates(
+        minhash_bands(docs, id_col, text_col), "doc_a", "doc_b",
+        telemetry=telemetry, family="minhash",
     )
-    if telemetry is not None:
-        cands = telemetry.observe(cands, "minhash")
     a = sh.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("id").alias("_bid"), F.col("sh").alias("sh_b"))
     common = (
@@ -489,91 +538,21 @@ def SIMHASH_SIGS_SQL(id_col: str = "doc_id", text_col: str = "text", table: str 
     """
 
 
-
-def band_keys(sigs: DataFrame, n_bands: int, band_bits: int) -> DataFrame:
-    """(id, sig, band, bits): each int64 signature exploded into its
-    LSH band bucket keys. Works for negative sigs too (a 64-bit family
-    uses bit 63 in two's complement): shiftrightunsigned + mask yields
-    the same band bits as DuckDB's arithmetic ``>>`` + mask."""
-    return sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("sig"), i * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("bits"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bd"),
-    ).select("id", "sig", F.col("bd.band").alias("band"), F.col("bd.bits").alias("bits"))
-
-
-def _banded_hamming_pairs(
-    sigs: DataFrame,
-    n_bands: int,
-    band_bits: int,
-    max_hamming: int,
-    a_name: str,
-    b_name: str,
-    telemetry=None,
-    family: str = "banded_hamming",
-) -> DataFrame:
-    """Shared band-LSH hamming machinery (SimHash over text, phash over
-    images — any int64 signature family): explode each (id, sig) into
-    its bands, candidates = band equi-join (pigeonhole: hamming <
-    n_bands ⇒ some band matches exactly), refine bit_count(xor) ≤ d."""
+def _hamming_refine(max_hamming: int, n_bands: int) -> tuple[str, Column, Column]:
+    """``band_candidates`` refine of the 64-bit families (SimHash over
+    text, phash over images): bit_count(sig_a xor sig_b) ≤ d. Exact by
+    pigeonhole: hamming < n_bands ⇒ some band matches exactly."""
     if not max_hamming < n_bands:
         raise ValueError("pigeonhole requires max_hamming < n_bands")
-    bands = band_keys(sigs, n_bands, band_bits)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    matches = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bits") == F.col("b.bits"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias(a_name),
-        F.col("b.id").alias(b_name),
-        F.col("a.sig").alias("sig_a"),
-        F.col("b.sig").alias("sig_b"),
-    )
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    if telemetry is not None:
-        # telemetry path (untimed bench pass): keep the r5 shape —
-        # distinct FIRST, so the observed number stays the canonical
-        # "distinct candidate pairs entering the refine" (the n²/2^bits
-        # collision-tail gauge, comparable across rounds); zero extra
-        # jobs (telemetry.CandidateTelemetry)
-        cands = telemetry.observe(matches.distinct(), family)
-        return cands.select(
-            a_name, b_name, ham.cast("long").alias("hamming")
-        ).filter(F.col("hamming") <= max_hamming)
-    # hot path (r6): refine BEFORE the dedup shuffle. The hamming test
-    # is a per-row codegen filter, so running it on the raw banded
-    # matches costs nothing extra — while distinct-first shuffled every
-    # spurious band collision (1.96M candidate rows for simhash at
-    # bench scale) just to discard them a node later. Filter-then-
-    # distinct is row-for-row identical output (the filter is
-    # deterministic per row), but the exchange now carries only the
-    # surviving near-dup pairs.
-    return (
-        matches.select(a_name, b_name, ham.cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return "hamming", ham.cast("long"), F.col("hamming") <= max_hamming
 
 
 def _BANDED_HAMMING_SQL(
     sigs_sql: str, n_bands: int, band_bits: int, max_hamming: int, a_name: str, b_name: str
 ) -> str:
-    """SQL twin of _banded_hamming_pairs over a (id, sig) CTE body."""
+    """SQL twin of ``band_candidates`` over ``band_keys`` with the
+    hamming refine, over a (id, sig) CTE body."""
     return f"""
         WITH sigs AS ({sigs_sql}),
         bands AS (
@@ -599,14 +578,14 @@ def simhash_pairs(
     telemetry=None,
 ) -> DataFrame:
     """Near-dup pairs with SimHash hamming distance ≤ d — the shared
-    band-LSH machinery over the 64-bit text signatures. Returns
+    banded-LSH candidates over the 64-bit text signatures. Returns
     (doc_a, doc_b, hamming)."""
     # NOT checkpointed: measured slower than recompute here — the two
     # consumers pipeline into one codegen stage each (see module notes)
     sigs = simhash_sigs(docs, id_col, text_col)
-    return _banded_hamming_pairs(
-        sigs, SH_BANDS, SH_BAND_BITS, max_hamming, "doc_a", "doc_b",
-        telemetry=telemetry, family="simhash",
+    return band_candidates(
+        band_keys(sigs, SH_BANDS, SH_BAND_BITS), "doc_a", "doc_b",
+        refine=_hamming_refine(max_hamming, SH_BANDS), telemetry=telemetry, family="simhash",
     )
 
 
@@ -640,14 +619,14 @@ def phash_neardup_pairs(
     telemetry=None,
 ) -> DataFrame:
     """Near-duplicate image pairs by perceptual-hash hamming distance —
-    the shared band-LSH machinery over the 64-bit phash (16-bit bands
+    the shared banded-LSH candidates over the 64-bit phash (16-bit bands
     keep random collisions at n²/2^16 per band). The image-table
     sibling of SimHash (task brief's image-dedup family). Returns
     (img_a, img_b, hamming)."""
     sigs = images.select(F.col(id_col).alias("id"), F.col(phash_col).alias("sig"))
-    return _banded_hamming_pairs(
-        sigs, PH_BANDS, PH_BAND_BITS, max_hamming, "img_a", "img_b",
-        telemetry=telemetry, family="phash",
+    return band_candidates(
+        band_keys(sigs, PH_BANDS, PH_BAND_BITS), "img_a", "img_b",
+        refine=_hamming_refine(max_hamming, PH_BANDS), telemetry=telemetry, family="phash",
     )
 
 

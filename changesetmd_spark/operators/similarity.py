@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from .dedup import band_candidates
+
 QUANT = 1_000_000  # element quantization
 # multi-table hyperplane LSH (OR-amplification): TABLES independent
 # hash tables of BITS sign-bits each. One monolithic table would be so
@@ -194,6 +196,19 @@ def _planes_matrix(n_planes: int = N_PLANES, base: int = 0) -> np.ndarray:
     )  # (n_planes, DIM)
 
 
+def _check_exact(a_norm: float, b_norm: float) -> None:
+    """Raise ValueError unless float64 dot products of vectors with L2
+    norms up to ``a_norm`` and ``b_norm`` are integer-exact: every
+    partial sum is at most a_norm·b_norm (Cauchy–Schwarz), exact while
+    within 2^53, so it matches the int64 column expressions and the
+    oracle."""
+    if a_norm * b_norm > 2.0**53:
+        raise ValueError(
+            "quantized embeddings too large for the exact float64 matmul: "
+            "a dot product can exceed 2^53"
+        )
+
+
 def lsh_table_keys(
     vec_q: Column,
     tables: int = LSH_TABLES,
@@ -223,12 +238,12 @@ def lsh_table_keys(
 
     @F.pandas_udf(ArrayType(LongType()))
     def _keys(vecs: pd.Series) -> pd.Series:
-        planes = _planes_matrix(n_planes, plane_base).T  # (DIM, n_planes)
-        m = np.stack(vecs.to_numpy())  # (n, DIM) int64 quantized
+        planes = _planes_matrix(n_planes, plane_base).T.astype(np.float64)  # (DIM, n_planes)
         # float64 matmul routes through BLAS (int64 matmul does not);
-        # |q| ≤ ~10^7 × ±1 over DIM=64 terms ⇒ |dot| ≤ ~10^9 ≪ 2^53,
-        # integer-exact in float64 — cast back is bit-identical
-        proj = (m.astype(np.float64) @ planes.astype(np.float64)).astype(np.int64)
+        # integer-exact under _check_exact, so the cast back is exact
+        m = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, DIM) quantized
+        _check_exact(np.sqrt((m * m).sum(axis=1).max()), np.sqrt(m.shape[1]))  # ±1 planes
+        proj = (m @ planes).astype(np.int64)
         sbits = (proj >= 0).astype(np.int64)  # (n, n_planes)
         weights = np.array([1 << (i % bits) for i in range(n_planes)], dtype=np.int64)
         weighted = sbits * weights
@@ -442,18 +457,22 @@ def _cells_udf(centroids: DataFrame, nprobe: int):
     the dominant ann_ivf cost — Spark evaluates higher-order array
     lambdas interpreted, per element). Exactness: quantized elements
     (≤ ~1e6) over DIM=64 terms keep every partial sum < 2^53, so the
-    float64 matmul is integer-exact; cos_q then replicates the column
+    float64 matmul is integer-exact (_check_exact raises on any batch
+    where that could fail); cos_q then replicates the column
     expression's IEEE op order (dot·1e6 / (√n_a·√n_b), floor) on
     identical doubles — bit-identical cells, oracle-gated."""
     ids, C, cn2 = _collect_centroids(centroids)
     k = min(nprobe, len(ids))
     sqrt_cn2 = np.sqrt(cn2)
+    c_norm = float(sqrt_cn2.max(initial=0.0))
 
     @F.pandas_udf(ArrayType(LongType()))
     def _cells(vecs: pd.Series) -> pd.Series:
         m = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, DIM)
-        dots = m @ C.T                                    # integer-exact
         vn2 = (m * m).sum(axis=1)                         # integer-exact
+        m_norm = float(np.sqrt(vn2.max()))
+        _check_exact(m_norm, max(m_norm, c_norm))
+        dots = m @ C.T                                    # integer-exact
         denom = np.sqrt(vn2)[:, None] * sqrt_cn2[None, :]
         with np.errstate(divide="ignore", invalid="ignore"):
             sim = np.where(denom > 0, np.floor(dots * 1e6 / denom), 0.0)
@@ -738,7 +757,8 @@ def embed_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (task brief dedup family):
     LSH-table candidates (pairs sharing ≥1 table bucket — near-parallel
-    vectors almost surely do) + exact quantized-cosine refine ≥ τ.
+    vectors almost surely do) + exact quantized-cosine refine ≥ τ, via
+    ``band_candidates`` with the table index as the band.
     Undirected, emitted once with vec_a < vec_b.
 
     Uses the PAIRS key layout (PAIR_TABLES×PAIR_BITS = 8×16-bit
@@ -749,35 +769,16 @@ def embed_neardup_pairs(
     p ≈ 1-(1-p_plane^16)^8 ≳ 0.995; recall is property-tested on
     planted duplicates and the full algorithm is oracle-gated
     (EMBED_NEARDUP_SQL)."""
-    v = _prep(vectors, id_col, vec_col, "v_").withColumn(
-        "bucket",
-        F.explode(
-            lsh_table_keys(F.col("v_vec"), PAIR_TABLES, PAIR_BITS, PAIR_PLANE_BASE)
-        ),
+    v = _prep(vectors, id_col, vec_col, "")
+    keys = lsh_table_keys(F.col("vec"), PAIR_TABLES, PAIR_BITS, PAIR_PLANE_BASE)
+    keyed = v.select(
+        "id", F.posexplode(keys).alias("band", "key"), F.col("vec").alias("q"), "n2"
     )
-    a = v.select(
-        F.col("bucket"),
-        F.col("v_id").alias("vec_a"),
-        F.col("v_vec").alias("va"),
-        F.col("v_n2").alias("na"),
-    )
-    b = v.select(
-        F.col("bucket"),
-        F.col("v_id").alias("vec_b"),
-        F.col("v_vec").alias("vb"),
-        F.col("v_n2").alias("nb"),
-    )
-    cand = (
-        a.join(b, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    if telemetry is not None:
-        cand = telemetry.observe(cand, "embed")
-    sim = cos_q(dot_int(F.col("va"), F.col("vb")), F.col("na"), F.col("nb"))
-    return (
-        cand.select("vec_a", "vec_b", sim.alias("cos_sim_q"))
-        .filter(F.col("cos_sim_q") >= threshold_q)
+    sim = cos_q(dot_int(F.col("q_a"), F.col("q_b")), F.col("n2_a"), F.col("n2_b"))
+    return band_candidates(
+        keyed, "vec_a", "vec_b",
+        refine=("cos_sim_q", sim, F.col("cos_sim_q") >= threshold_q),
+        telemetry=telemetry, family="embed",
     )
 
 

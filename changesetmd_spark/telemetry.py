@@ -3,21 +3,22 @@ phash, MinHash-LSH, embedding-LSH).
 
 Why: every banded-LSH self-join carries an n²/2^band_bits
 random-collision term. At bench scale it is invisible; at 10⁹ rows it
-decides feasibility — so the operator running the job needs the
-candidate-pair count of every run surfaced as data, not recomputed by
-hand.
+decides feasibility — so the operator running the job needs that
+count of every run surfaced as data, not recomputed by hand.
 
-How (Spark-first): ``DataFrame.observe`` attaches an exact count to
-the candidate relation that is collected DURING the action that
-consumes the pairs — zero extra jobs, no second evaluation of the
-join, works identically on a 1000-executor cluster. It is not
-entirely free, though: the CollectMetrics node is a codegen-span
-boundary, measured ~+1s on the widest candidate relation (simhash at
-bench scale) — so latency-sensitive callers (bench.py) time the
-un-observed plan and collect counts in a separate pass. ``flush`` appends
-the collected numbers to a SnapStore metrics sidecar
-(``SnapStore.log_metric``), queryable via ``custom_metrics()``
-alongside the per-snapshot lineage the store already keeps.
+What: the raw band-join row count of ``dedup.band_candidates``,
+Σ_buckets C(size, 2), taken before the row refine and the dedup. A
+pair that shares several bands counts once per band, so this is the
+collision gauge itself, not a distinct-pair count.
+
+How: ``DataFrame.observe`` attaches an exact count that is collected
+DURING the action that consumes the pairs — zero extra jobs, no second
+evaluation of the join. The observed plan is the unobserved plan plus
+one CollectMetrics node; that node is a codegen-span boundary, so
+latency-sensitive callers (bench.py) time the un-observed plan and
+collect counts in a separate pass. ``flush`` appends the numbers to a
+SnapStore metrics sidecar (``SnapStore.log_metric``), queryable via
+``custom_metrics()``.
 
 Usage::
 
@@ -34,7 +35,7 @@ from pyspark.sql import functions as F
 
 
 class CandidateTelemetry:
-    """Collects (family → candidate-pair count) across LSH operators.
+    """Collects (family → raw band-match count) across LSH operators.
 
     One instance may observe several families (e.g. a dedup pipeline
     running simhash + minhash in one job); each ``observe`` call wires
@@ -46,7 +47,7 @@ class CandidateTelemetry:
         self._obs: list[tuple[str, Observation]] = []
 
     def observe(self, candidates: DataFrame, family: str) -> DataFrame:
-        """Wrap a candidate-pair relation with a metric point; returns
+        """Wrap a band-join relation with a metric point; returns
         the (semantically identical) DataFrame to keep composing.
         Observing the same family twice on one instance gets distinct
         keys (family, family#2, ...) — a dict would silently keep only
@@ -58,7 +59,7 @@ class CandidateTelemetry:
         return candidates.observe(obs, F.count(F.lit(1)).alias("candidates"))
 
     def counts(self) -> dict[str, int]:
-        """family → observed candidate count (blocks until the
+        """family → observed band-match count (blocks until the
         observed actions have run)."""
         return {fam: int(o.get["candidates"]) for fam, o in self._obs}
 

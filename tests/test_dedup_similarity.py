@@ -3,12 +3,21 @@ planted near-duplicates are found, LSH recall vs exact, determinism."""
 
 from __future__ import annotations
 
+import math
+import re
+from itertools import combinations
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
+from pyspark.testing import assertDataFrameEqual
 
+from changesetmd_spark import entry_queries as EQ
 from changesetmd_spark.operators import dedup, similarity
+from changesetmd_spark.operators.text import token_hash
+from changesetmd_spark.telemetry import CandidateTelemetry
 
 
 @pytest.fixture(scope="module")
@@ -140,7 +149,7 @@ def test_simhash_band_collisions_stay_linear_on_random_corpus(spark):
     sigs = dedup.simhash_sigs(docs)
     buckets = (
         dedup.band_keys(sigs, dedup.SH_BANDS, dedup.SH_BAND_BITS)
-        .groupBy("band", "bits")
+        .groupBy("band", "key")
         .agg(F.count("*").alias("c"))
         .select((F.col("c") * (F.col("c") - 1) / 2).alias("pairs"))
         .agg(F.sum("pairs").alias("total"))
@@ -349,13 +358,12 @@ def test_embed_pair_bucket_collisions_stay_linear_on_random_corpus(spark):
 
 
 def test_candidate_telemetry_counts_and_flush(spark, docs, vectors, tmp_path):
-    """VERDICT r3 item 4: every LSH family can report its candidate-
-    pair count (the n²/2^bits collision-tail gauge) via a zero-extra-
-    job observation, and flush() lands the rows in a SnapStore metrics
+    """VERDICT r3 item 4: every LSH family can report its raw band-match
+    count (the n²/2^bits collision-tail gauge) via a zero-extra-job
+    observation, and flush() lands the rows in a SnapStore metrics
     sidecar. The observed count must equal an independent recount of
-    the candidate relation."""
+    the band self-join."""
     from changesetmd_spark.sources.snapstore import SnapStore
-    from changesetmd_spark.telemetry import CandidateTelemetry
 
     tel = CandidateTelemetry()
     sh_pairs = dedup.simhash_pairs(docs, telemetry=tel)
@@ -378,8 +386,8 @@ def test_candidate_telemetry_counts_and_flush(spark, docs, vectors, tmp_path):
     # exact copies guarantee non-empty candidate sets for the text families
     assert got["simhash"] > 0 and got["minhash"] > 0 and got["embed"] > 0
 
-    # independent recount: simhash candidates = distinct band-collision
-    # pairs BEFORE the hamming refine
+    # independent recount: simhash candidates = raw band matches (one
+    # row per pair and shared band) BEFORE the hamming refine and dedup
     sigs = dedup.simhash_sigs(docs)
     bands = dedup.band_keys(sigs, dedup.SH_BANDS, dedup.SH_BAND_BITS)
     a, b = bands.alias("a"), bands.alias("b")
@@ -387,11 +395,10 @@ def test_candidate_telemetry_counts_and_flush(spark, docs, vectors, tmp_path):
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bits") == F.col("b.bits"))
+            & (F.col("a.key") == F.col("b.key"))
             & (F.col("a.id") < F.col("b.id")),
         )
         .select("a.id", "b.id")
-        .distinct()
         .count()
     )
     assert got["simhash"] == recount
@@ -404,6 +411,184 @@ def test_candidate_telemetry_counts_and_flush(spark, docs, vectors, tmp_path):
         for r in store.custom_metrics().filter(F.col("kind") == "lsh_candidates").collect()
     }
     assert rows == got
+
+
+# ---------------------------------------------------------------------------
+# band_candidates through the four LSH families: degenerate inputs vs an
+# all-pairs brute force, and one plan whether or not it is observed
+# ---------------------------------------------------------------------------
+
+LSH_PAIRS = {
+    "simhash": dedup.simhash_pairs,
+    "phash": dedup.phash_neardup_pairs,
+    "minhash": dedup.minhash_lsh_pairs,
+    "embed": similarity.embed_neardup_pairs,
+}
+
+
+def _int64(u: int) -> int:
+    u &= 2**64 - 1
+    return u - 2**64 if u >= 2**63 else u
+
+
+def _planted_phash(spark):
+    """40 random 64-bit hashes plus flipped copies at hamming 1, 1 (the
+    sign bit), 3 and 4 — the last one the ≤ 3 refine must drop."""
+    rng = np.random.default_rng(5)
+    sigs = [int(x) for x in rng.integers(-(2**62), 2**62, size=40)]
+    for i, mask in [(0, 1), (1, 1 << 63), (2, 0b111), (3, 0b1111 << 20)]:
+        sigs.append(_int64(sigs[i] ^ mask))
+    return spark.createDataFrame(list(enumerate(sigs)), "image_id long, phash long")
+
+
+def _lsh_input(spark, family, case, docs, vectors):
+    if family == "embed":
+        base, key = vectors, "vec_id"
+        same = vectors.filter(F.col("vec_id") == 0).crossJoin(spark.range(5)).select(
+            F.col("id").alias("vec_id"), "embedding"
+        )
+    elif family == "phash":
+        base, key = _planted_phash(spark), "image_id"
+        same = spark.range(6).select(
+            F.col("id").alias("image_id"), F.lit(-(2**62) - 12345).alias("phash")
+        )
+    else:
+        base, key = docs, "doc_id"
+        same = spark.range(6).select(
+            F.col("id").alias("doc_id"),
+            F.lit("one sentence repeated verbatim as every document here").alias("text"),
+        )
+    if case == "empty":
+        return base.filter(F.lit(False))
+    if case == "one_row":
+        return base.filter(F.col(key) == 0)
+    return same if case == "identical" else base
+
+
+def _brute_force_pairs(family, df):
+    """Every id pair (a < b) that shares a band bucket and passes the
+    refine, enumerated in Python — no self-join."""
+    if family in ("simhash", "phash"):
+        sigs = (
+            {r.id: r.sig for r in dedup.simhash_sigs(df).collect()}
+            if family == "simhash"
+            else {r.image_id: r.phash for r in df.collect()}
+        )
+        ham = {
+            (a, b): bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1")
+            for a, b in combinations(sorted(sigs), 2)
+        }
+        return [(a, b, h) for (a, b), h in ham.items() if h <= 3]
+    if family == "minhash":
+        bands: dict[int, set] = {}
+        for r in dedup.minhash_bands(df).collect():
+            bands.setdefault(r.id, set()).add((r.band, r.key))
+        sh = {
+            r.doc_id: set(r.sh)
+            for r in df.select(
+                "doc_id", F.transform(dedup.shingles(F.col("text")), token_hash).alias("sh")
+            ).collect()
+        }
+        out = []
+        for a, b in combinations(sorted(sh), 2):
+            common = len(sh[a] & sh[b])
+            jq = math.floor(common * 1000000 / (len(sh[a]) + len(sh[b]) - common))
+            if bands[a] & bands[b] and jq >= dedup.JACCARD_T_Q:
+                out.append((a, b, jq))
+        return out
+    q = similarity.quantized(F.col("embedding"))
+    keys = similarity.lsh_table_keys(
+        q, similarity.PAIR_TABLES, similarity.PAIR_BITS, similarity.PAIR_PLANE_BASE
+    )
+    rows = {r.vec_id: r for r in df.select("vec_id", q.alias("q"), keys.alias("keys")).collect()}
+    out = []
+    for a, b in combinations(sorted(rows), 2):
+        qa, qb = rows[a].q, rows[b].q
+        dot = sum(x * y for x, y in zip(qa, qb))
+        denom = math.sqrt(float(sum(x * x for x in qa))) * math.sqrt(float(sum(x * x for x in qb)))
+        cos = math.floor(float(dot) * 1e6 / denom) if denom > 0 else 0
+        if set(rows[a].keys) & set(rows[b].keys) and cos >= 950_000:
+            out.append((a, b, cos))
+    return out
+
+
+@pytest.mark.parametrize("case", ["empty", "one_row", "identical", "planted"])
+@pytest.mark.parametrize("family", sorted(LSH_PAIRS))
+def test_lsh_pairs_equal_brute_force_on_degenerate_inputs(spark, docs, vectors, family, case):
+    """Each family's pairs are exactly the brute-force all-pairs answer:
+    no pairs from empty or one-row inputs, and identical rows — every
+    pair colliding in every band — give every pair exactly once."""
+    df = _lsh_input(spark, family, case, docs, vectors)
+    got = LSH_PAIRS[family](df)
+    want = _brute_force_pairs(family, df)
+    if case == "identical":
+        n = df.count()
+        assert len(want) == n * (n - 1) // 2
+    if case == "planted":
+        assert want
+    assertDataFrameEqual(got, spark.createDataFrame(want, got.schema))
+
+
+def _plan_nodes(df, skip=("CollectMetrics",)) -> list[tuple[int, str]]:
+    """(depth, node) of the physical plan with ``skip`` nodes removed and
+    expression ids and lambda-variable suffixes blanked, so two
+    plannings of one query compare."""
+    out: list[tuple[int, str]] = []
+
+    def walk(node, depth):
+        name = node.nodeName()
+        kept = name not in skip
+        if kept:
+            out.append((depth, re.sub(r"(_\d+)?#\d+L?|plan_id=\d+", "#", node.simpleString(1000))))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), depth + kept)
+
+    plan = df._jdf.queryExecution().executedPlan()
+    walk(plan.executedPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan, 0)
+    return out
+
+
+@pytest.fixture(scope="module")
+def lsh_sf_dir(spark, docs, vectors, tmp_path_factory):
+    """The tables the four LSH gates read, at fixture size."""
+    root = tmp_path_factory.mktemp("lsh_sf")
+    docs.write.parquet(f"{root}/documents.parquet")
+    vectors.write.parquet(f"{root}/embeddings.parquet")
+    spark.range(1, 201).select(F.col("id").alias("o_orderkey")).write.parquet(
+        f"{root}/orders.parquet"
+    )
+    return str(root)
+
+
+def test_observed_gate_plan_is_the_unobserved_plan(spark, lsh_sf_dir):
+    """Observing an LSH gate's candidates adds a CollectMetrics node and
+    changes nothing else in its physical plan."""
+    for gate in ("phash_neardup", "simhash", "minhash_lsh", "embed_neardup"):
+        plain = EQ.QUERIES[gate](spark, lsh_sf_dir)
+        EQ.ACTIVE_TELEMETRY = CandidateTelemetry()
+        try:
+            observed = EQ.QUERIES[gate](spark, lsh_sf_dir)
+        finally:
+            EQ.ACTIVE_TELEMETRY = None
+        assert len(_plan_nodes(observed, skip=())) == len(_plan_nodes(plain)) + 1, gate
+        assert _plan_nodes(observed) == _plan_nodes(plain), gate
+
+
+def test_float64_matmul_rejects_inexact_magnitudes(spark, vectors):
+    """Quantized 1e10-magnitude elements (1e16 after ×1e6) push the
+    float64 matmuls of lsh_table_keys and the IVF cell UDF past 2^53,
+    where they would stop being integer-exact: both fail loudly."""
+    huge = vectors.select(
+        F.col("vec_id").alias("v_id"),
+        similarity.quantized(F.transform("embedding", lambda x: x * 1e10)).alias("v_vec"),
+        F.lit(0).cast("long").alias("v_n2"),
+    )
+    with pytest.raises(PythonException, match=r"ValueError: .*2\^53"):
+        huge.select(similarity.lsh_table_keys(F.col("v_vec"))).collect()
+    cents = similarity._prep(vectors.filter(F.col("vec_id") < 4), "vec_id", "embedding", "c_")
+    with pytest.raises(PythonException, match=r"ValueError: .*2\^53"):
+        similarity.ivf_assign_lists(huge, cents).collect()
 
 
 def test_dedup_clusters_transitive_closure(spark):
