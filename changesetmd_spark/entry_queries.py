@@ -1525,7 +1525,7 @@ ORACLES: dict[str, str] = {
         WHERE 6371.0088 * 6371.0088 * radians(max_lon - min_lon)
               * (sin(radians(max_lat)) - sin(radians(min_lat))) < 300000.0
     """,
-    "lat_clamp": """
+    "lat_clamp": f"""
         WITH ph AS (
             SELECT o_orderkey AS point_id,
                    ((o_orderkey * 2654435761 % 4294967296) * 2147483648
@@ -1538,7 +1538,7 @@ ORACLES: dict[str, str] = {
             FROM ph
         )
         SELECT point_id,
-               CAST(floor(greatest(-90.0, least(90.0, lat_raw)) * 10000) AS BIGINT) AS lat_q,
+               CAST(floor({geo.CLAMP_LAT_SQL("lat_raw")} * 10000) AS BIGINT) AS lat_q,
                abs(lat_raw) > 90.0 AS was_out_of_range
         FROM raw
     """,

@@ -61,8 +61,14 @@ def phash_to_lon(phash: Column) -> Column:
 
 
 def clamp_lat(lat: Column) -> Column:
-    """B8: clamp latitude into [-90, 90] before any cell encode."""
-    return F.greatest(F.lit(-90.0), F.least(F.lit(90.0), lat))
+    """B8: clamp latitude into [-90, 90] before any cell encode. A NULL
+    latitude stays NULL: ``greatest``/``least`` skip NULLs in both
+    engines, so the usual nesting would clamp it to the North Pole."""
+    return F.when(lat < -90.0, -90.0).when(lat > 90.0, 90.0).otherwise(lat)
+
+
+def CLAMP_LAT_SQL(lat: str) -> str:
+    return f"(CASE WHEN {lat} < -90.0 THEN -90.0 WHEN {lat} > 90.0 THEN 90.0 ELSE {lat} END)"
 
 
 def wrap_lon(lon: Column) -> Column:

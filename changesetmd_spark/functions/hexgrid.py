@@ -36,6 +36,8 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .geo import CLAMP_LAT_SQL, clamp_lat
+
 try:  # pragma: no cover - optional accelerator, absent in this env
     import h3 as _h3  # noqa: F401
 
@@ -68,7 +70,7 @@ def _axial_frac(lat: Column, lon: Column, res: int) -> tuple[Column, Column]:
     """Fractional axial (q, r) of a point. Pointy-top hexes:
     q = (√3/3·x − 1/3·y)/size,  r = (2/3·y)/size with x=lon, y=lat."""
     s = size_deg(res)
-    lat_c = F.greatest(F.lit(-90.0), F.least(F.lit(90.0), lat))
+    lat_c = clamp_lat(lat)
     q = (F.lit(_SQRT3_3) * lon - lat_c / F.lit(3.0)) / F.lit(s)
     r = (F.lit(2.0 / 3.0) * lat_c) / F.lit(s)
     return q, r
@@ -107,7 +109,12 @@ def hex_cell(lat: Column, lon: Column, res: int) -> Column:
     SECOND time per row just to check a condition that is always true
     (r6 plan audit: the flagship gate's scan-side Filter inlined the
     packed-cell expression ~20×). With a non-nullable key no null
-    filter is generated at all; the value is unchanged."""
+    filter is generated at all; the value is unchanged.
+
+    0 is the "no cell" id, given to a point whose latitude or
+    longitude is NULL. No cover contains it: for lon in [-180, 180)
+    and a clamped lat, |q| and |r| stay below 2^25 even at MAX_RES, so
+    every real cell id is positive."""
     q, r = _axial_frac(lat, lon, res)
     qi, ri = _cube_round(q, r)
     return F.coalesce(pack_cell(res, qi, ri), F.lit(0).cast("long"))
@@ -139,8 +146,8 @@ def hex_cell_cover(
     axial rectangle — a superset, pruned by the exact refine predicate.
     """
     s = size_deg(res)
-    lat_lo = F.greatest(F.lit(-90.0), F.least(F.lit(90.0), min_lat))
-    lat_hi = F.greatest(F.lit(-90.0), F.least(F.lit(90.0), max_lat))
+    lat_lo = clamp_lat(min_lat)
+    lat_hi = clamp_lat(max_lat)
     q_min = (F.lit(_SQRT3_3) * min_lon - lat_hi / F.lit(3.0)) / F.lit(s)
     q_max = (F.lit(_SQRT3_3) * max_lon - lat_lo / F.lit(3.0)) / F.lit(s)
     r_min = (F.lit(2.0 / 3.0) * lat_lo) / F.lit(s)
@@ -239,7 +246,7 @@ def HEX_CELL_SQL(lat: str, lon: str, res: int) -> str:
     rounding (floor(x+0.5)/ceil(x-0.5) — Spark's F.round semantics),
     same cube-round fixups, same linear packing."""
     s = repr(size_deg(res))
-    lat_c = f"greatest(-90.0, least(90.0, {lat}))"
+    lat_c = CLAMP_LAT_SQL(lat)
     q = f"(({_SQRT3_3!r} * {lon} - {lat_c} / 3.0) / {s})"
     r = f"((0.6666666666666666 * {lat_c}) / {s})"
     y = f"(-{q} - {r})"
@@ -253,9 +260,9 @@ def HEX_CELL_SQL(lat: str, lon: str, res: int) -> str:
     q_out = f"CAST((CASE WHEN {fix_q} THEN -{ry} - {rr} ELSE {rq} END) AS BIGINT)"
     r_out = f"CAST((CASE WHEN {fix_r} THEN -{rq} - {ry} ELSE {rr} END) AS BIGINT)"
     return (
-        f"(CAST({res} AS BIGINT) * {_RES_SHIFT} "
+        f"coalesce(CAST({res} AS BIGINT) * {_RES_SHIFT} "
         f"+ ({q_out} + {_Q_OFF}) * CAST({_Q_SHIFT} AS BIGINT) "
-        f"+ ({r_out} + {_Q_OFF}))"
+        f"+ ({r_out} + {_Q_OFF}), 0)"
     )
 
 

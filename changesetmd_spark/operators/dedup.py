@@ -92,14 +92,20 @@ def EXACT_DEDUP_SQL(id_col: str = "doc_id", text_col: str = "text", table: str =
 
 def shingles(text_col) -> object:
     """Distinct k-word shingles of a document (array<string>). Short
-    docs (<k tokens) produce one whole-text shingle."""
+    docs (<k tokens) produce one whole-text shingle; a doc with no
+    tokens (NULL, empty or blank text) produces none, as in
+    SHINGLES_SQL, where the empty slice joins to NULL and
+    list_distinct drops it."""
     toks = tokens(text_col)
     n = F.greatest(F.size(toks) - F.lit(SHINGLE_K - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, SHINGLE_K)),
-        )
+    return F.filter(
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), n),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, SHINGLE_K)),
+            )
+        ),
+        lambda s: s != "",
     )
 
 

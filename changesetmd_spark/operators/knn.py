@@ -126,7 +126,7 @@ def knn_join_rings(
     # run: huge literal arrays are poison for codegen.)
     q_normal = (
         queries.filter(~is_polar)
-        .withColumn("_qcell", hexgrid.hex_cell(geo.clamp_lat(F.col(q_lat)), F.col(q_lon), res))
+        .withColumn("_qcell", hexgrid.hex_cell(F.col(q_lat), F.col(q_lon), res))
         .withColumn("hex_cell", F.explode(hexgrid.grid_disk(F.col("_qcell"), rings)))
         .drop("_qcell")
     )
@@ -144,7 +144,7 @@ def knn_join_rings(
     )
     q = q_normal.unionByName(q_polar)
     p = points.withColumn(
-        "hex_cell", hexgrid.hex_cell(geo.clamp_lat(F.col(p_lat)), F.col(p_lon), res)
+        "hex_cell", hexgrid.hex_cell(F.col(p_lat), F.col(p_lon), res)
     )
     q = strategy.maybe_broadcast(q, hint=broadcast_queries)
     pairs = p.join(q, "hex_cell").withColumn(

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import geo, hexgrid
+from ..functions import hexgrid
 from ..plans import strategy
 
 
@@ -96,7 +96,7 @@ def polygon_contains_join(
     meets a polygon's cover in at most one cell, so the (point,
     poly_id) candidate set is identical to the direct join's."""
     pts = points.withColumn(
-        "hex_cell", hexgrid.hex_cell(geo.clamp_lat(F.col(lat)), F.col(lon), res)
+        "hex_cell", hexgrid.hex_cell(F.col(lat), F.col(lon), res)
     )
     b_min_lat, b_max_lat, b_min_lon, b_max_lon = polygon_bbox(F.col("xs"), F.col("ys"))
     cov = polygons.withColumn(

@@ -105,7 +105,7 @@ def tile_points(
 ) -> DataFrame:
     """Attach the hex cell id (pure column expr — codegen, no UDF)."""
     return points.withColumn(
-        out, hexgrid.hex_cell(geo.clamp_lat(F.col(lat)), F.col(lon), res)
+        out, hexgrid.hex_cell(F.col(lat), F.col(lon), res)
     )
 
 

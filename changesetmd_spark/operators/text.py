@@ -56,7 +56,12 @@ def token_hash(tok: Column) -> Column:
     tokens every caller feeds it): as an equi-join key — the shingle
     inverted-index self-joins — a nullable hash makes Catalyst push an
     isnotnull(<md5 expression>) filter into the scan stage, computing
-    the md5 an extra time per shingle (r6 plan audit)."""
+    the md5 an extra time per shingle (r6 plan audit).
+
+    0 is the "no token" value a NULL token would get. No index key is
+    built from it: ``tokens`` and ``shingles`` never yield NULL or
+    empty strings, so a 0 key comes only from a real token whose md5
+    starts with eight zero hex digits."""
     return F.coalesce(
         F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long"),
         F.lit(0).cast("long"),

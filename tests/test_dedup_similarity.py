@@ -136,6 +136,31 @@ def test_simhash_scalar_set_and_oracle_parity(spark, docs):
     assert scalar == sigs and setb == sigs
 
 
+def test_tokenless_docs_form_no_pairs_like_the_oracles(spark):
+    """A doc with no tokens (NULL, empty or blank text) has no shingles
+    in either engine, so it pairs with nothing. The DuckDB twins are
+    the reference here: a Python recount built on ``shingles`` would
+    inherit whatever that function gets wrong."""
+    import duckdb
+
+    pdf = pd.DataFrame(
+        [(1, None), (2, None), (3, "a b c d e f g"), (4, ""), (5, "   "),
+         (6, "a b c d e f g h")],
+        columns=["doc_id", "text"],
+    )
+    docs = spark.createDataFrame(pdf, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    for spark_pairs, oracle in (
+        (dedup.ngram_jaccard_pairs, dedup.NGRAM_JACCARD_SQL),
+        (dedup.minhash_lsh_pairs, dedup.MINHASH_LSH_SQL),
+    ):
+        got = {tuple(r) for r in spark_pairs(docs).collect()}
+        want = set(con.execute(oracle()).fetchall())
+        assert got == want, spark_pairs.__name__
+        assert {(3, 6)} == {(a, b) for a, b, _ in got}, spark_pairs.__name__
+
+
 def test_simhash_band_collisions_stay_linear_on_random_corpus(spark):
     """The 100 TB guard the 64-bit widening buys: on a corpus of
     mutually-unrelated docs, LSH band buckets must produce ~no

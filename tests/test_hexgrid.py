@@ -89,6 +89,31 @@ def test_out_of_range_lat_clamps_not_errors(spark):
     assert got[0].c == want[0].c
 
 
+def test_null_coordinates_get_cell_zero_in_both_twins(spark):
+    """A NULL latitude must not clamp to the pole: any NULL coordinate
+    gives the "no cell" id 0, in the Column expression and in its SQL
+    twin alike. A valid row keeps the two engines honest."""
+    import duckdb
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {"id": [0, 1, 2, 3], "lat": [None, 10.0, None, 10.0], "lon": [5.0, None, None, 5.0]}
+    )
+    df = spark.createDataFrame(pdf, "id long, lat double, lon double")
+    con = duckdb.connect()
+    con.register("pts", pdf)
+    for res in (3, 7):
+        got = {
+            r.id: r.c
+            for r in df.select("id", hg.hex_cell(F.col("lat"), F.col("lon"), res).alias("c")).collect()
+        }
+        want = dict(
+            con.execute(f"SELECT id, {hg.HEX_CELL_SQL('lat', 'lon', res)} FROM pts").fetchall()
+        )
+        assert got == want
+        assert got[0] == got[1] == got[2] == 0 and got[3] != 0
+
+
 def test_cell_to_parent_contains_child_center(spark):
     """Re-encoding a fine cell's center at a coarser res gives the
     coarse cell of that center (hierarchy consistency)."""

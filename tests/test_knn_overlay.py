@@ -386,6 +386,37 @@ def test_polygon_contains_matches_numpy_oracle(spark):
     assert got == want and len(want) > 50
 
 
+def test_polygon_contains_null_coordinates_match_nothing(spark):
+    """A point with a NULL coordinate is in no polygon, on the
+    broadcast, shuffle and compact-build paths alike. Polygon 1 reaches
+    the North Pole cell a NULL latitude used to be clamped into."""
+    from changesetmd_spark.operators import polygon_join as pj
+
+    pts = spark.createDataFrame(
+        [(0, None, 5.0), (1, 1.0, None), (2, None, None), (3, 1.0, 1.0), (4, 89.0, 5.0)],
+        "point_id long, lat double, lon double",
+    )
+    polys = spark.createDataFrame(
+        [
+            (0, [0.0, 2.0, 2.0, 0.0], [0.0, 0.0, 2.0, 2.0]),
+            (1, [0.0, 10.0, 10.0, 0.0], [85.0, 85.0, 90.0, 90.0]),
+        ],
+        "poly_id long, xs array<double>, ys array<double>",
+    )
+    for kwargs in (
+        dict(broadcast_polygons=True),
+        dict(broadcast_polygons=False),
+        dict(compact_build=True),
+    ):
+        got = {
+            (rw.point_id, rw.poly_id)
+            for rw in pj.polygon_contains_join(pts, polys, n_vertices=4, res=2, **kwargs)
+            .select("point_id", "poly_id")
+            .collect()
+        }
+        assert got == {(3, 0), (4, 1)}, f"mismatch for {kwargs}"
+
+
 def test_polygon_compact_build_rejects_shuffle_path(spark):
     """compact_build broadcasts both build relations, so asking for the
     shuffle path with it must fail loudly, not force-broadcast."""

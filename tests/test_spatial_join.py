@@ -81,6 +81,33 @@ def test_contains_join_matches_oracle_all_strategies(spark):
         assert got == want, f"mismatch for {kwargs}"
 
 
+def test_null_coordinates_match_no_box_on_any_path(spark):
+    """A point with a NULL latitude or longitude is in no box, on every
+    contains_join path. Box 1 covers the North Pole cell a NULL
+    latitude used to be clamped into."""
+    points = spark.createDataFrame(
+        [(0, None, 5.0), (1, 10.0, None), (2, None, None), (3, 10.0, 5.0), (4, 89.0, 5.0)],
+        "point_id long, lat double, lon double",
+    )
+    boxes = spark.createDataFrame(
+        [(0, 9.0, 11.0, 4.0, 6.0), (1, 85.0, 90.0, 0.0, 10.0)],
+        "box_id long, min_lat double, max_lat double, min_lon double, max_lon double",
+    )
+    for kwargs in (
+        dict(broadcast_boxes=True),
+        dict(broadcast_boxes=False),
+        dict(broadcast_boxes=True, compact_build=True),
+        dict(broadcast_boxes=False, salt_buckets=4, point_salt_key="point_id"),
+    ):
+        got = {
+            (r.point_id, r.box_id)
+            for r in sj.contains_join(points, boxes, res=3, **kwargs)
+            .select("point_id", "box_id")
+            .collect()
+        }
+        assert got == {(3, 0), (4, 1)}, f"mismatch for {kwargs}"
+
+
 def test_contains_join_res_invariance(spark):
     """Result must not depend on the index resolution (only the plan
     shape does)."""

@@ -37,7 +37,7 @@ def main() -> int:
     import __spark_entry__ as em
     from changesetmd_spark.session import get_spark
 
-    spark = get_spark(app_name="audit-plans", master="local[8]")
+    spark = get_spark(app_name="audit-plans")
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     for name, fn in em.queries().items():

@@ -100,7 +100,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from changesetmd_spark.session import get_spark
 
-    spark = get_spark(app_name="check-correctness", master="local[8]")
+    spark = get_spark(app_name="check-correctness")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
